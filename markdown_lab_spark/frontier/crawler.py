@@ -9,7 +9,8 @@ Spark-first design (SURVEY.md §3.2/§4):
 - URL-seen = sharded from-scratch bloom PREFILTER (no false negatives ->
   bloom-miss rows skip the join entirely) + exact ``left_anti`` join for
   bloom hits, so a false positive costs a probe, never a dropped URL.
-- Politeness = salted host-partitioned priority queues (politeness.py).
+- Politeness = per-host priority queues cut at the budget in one shuffle
+  (politeness.py).
 - Robots allow/deny parsed from the corpus's robots.txt rows, broadcast.
 - Canonicalization in the hot path is a pure JVM expression
   (normalize_url_col) — Python only runs inside the Arrow-batched convert
@@ -23,20 +24,22 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Tuple
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.udfs import (
-    chunk_markdown_udf,
-    convert_markdown_udf,
-    normalize_url_col,
     domain_col,
+    make_chunk_markdown_udf,
+    make_convert_udf,
+    normalize_url_col,
 )
 from ..oracle.sitemap import RobotsRules
 from .bloom import ShardedBloom
@@ -72,6 +75,7 @@ class CrawlConfig:
     bloom_shards: int = 8
     bloom_capacity_per_shard: int = 1 << 17
     bloom_fpr: float = 0.01
+    # shard count of the ranked tail's per-host queue ranks (tail.py)
     salt_n: int = 16
     chunk_size: int = 1000
     chunk_overlap: int = 200
@@ -582,6 +586,15 @@ class CrawlEngine:
         self.fetch_plans: List[str] = []
         CrawlEngine._instances += 1
         self._tbl_prefix = f"mls_e{CrawlEngine._instances}"
+        # per-engine pandas UDFs: a UDF object caches its JVM function,
+        # which is bound to the accumulator server of the SparkContext it
+        # first ran in, so a module-level UDF breaks in a later context.
+        # Markdown-only convert: the crawl consumes markdown + links and
+        # skips the json/xml serializations.
+        self._convert_udf = make_convert_udf(("markdown",))
+        self._chunk_udf = make_chunk_markdown_udf(
+            self.config.chunk_size, self.config.chunk_overlap
+        )
         # canonicalize the corpus once; keep html out of any shuffle by
         # projecting it only at the join
         self.pages = pages.withColumn("canon_url", normalize_url_col(F.col("url")))
@@ -685,13 +698,29 @@ class CrawlEngine:
     ) -> None:
         if self.checkpoint_dir is None:
             return
-        frontier_next.write.mode("overwrite").parquet(
-            self._ckpt_path(wave, "frontier_next")
-        )
-        seen_delta.write.mode("overwrite").parquet(self._ckpt_path(wave, "seen_delta"))
-        docs.write.mode("overwrite").parquet(self._ckpt_path(wave, "docs"))
-        chunks.write.mode("overwrite").parquet(self._ckpt_path(wave, "chunks"))
-        metrics.write.mode("overwrite").parquet(self._ckpt_path(wave, "metrics"))
+        frames = {
+            "frontier_next": frontier_next,
+            "seen_delta": seen_delta,
+            "docs": docs,
+            "chunks": chunks,
+            "metrics": metrics,
+        }
+
+        def write(name: str, df: DataFrame) -> None:
+            df.write.mode("overwrite").parquet(self._ckpt_path(wave, name))
+
+        # the five writes are independent: submit them together so their
+        # Spark jobs overlap instead of queueing one after another. The
+        # wrapper carries this thread's job group, local properties and
+        # session tags into the writer threads. The manifest is written
+        # only after every write succeeded, so a failed wave stays
+        # incomplete.
+        task = inheritable_thread_target(self.spark)(write)
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            futures = [pool.submit(task, name, df) for name, df in frames.items()]
+        errors = [e for e in (fut.exception() for fut in futures) if e is not None]
+        if errors:
+            raise errors[0]
         manifest = {"wave": wave}
         with open(
             os.path.join(self.checkpoint_dir, f"wave={wave}", "MANIFEST.json"), "w"
@@ -988,19 +1017,15 @@ class CrawlEngine:
                             heads.withColumn("_src", F.lit("head"))
                         )
                 elif deferred_state is not None:
-                    heads, _rest = schedule_wave(
-                        deferred_state, cfg.budget, cfg.salt_n
-                    )
+                    heads, _rest = schedule_wave(deferred_state, cfg.budget)
                     # one tail scan; heads is <= hosts*budget rows
                     heads = heads.localCheckpoint(eager=True)
                     sched_in = sched_in.unionByName(
                         heads.withColumn("_src", F.lit("head"))
                     )
-                scheduled, deferred = schedule_wave(
-                    sched_in, cfg.budget, cfg.salt_n
-                )
+                scheduled, deferred = schedule_wave(sched_in, cfg.budget)
             else:
-                scheduled, deferred = schedule_wave(allowed, cfg.budget, cfg.salt_n)
+                scheduled, deferred = schedule_wave(allowed, cfg.budget)
             if self.host_delays is not None:
                 scheduled, cut = cap_schedule_by_delay(
                     scheduled, self.host_delays, cfg.wave_seconds, cfg.budget
@@ -1167,10 +1192,8 @@ class CrawlEngine:
             # 5. convert + chunk (Arrow-vectorized)
             docs = (
                 fetched.withColumn(
-                    # markdown-only variant: the crawl consumes markdown +
-                    # links; json/xml serialization is skipped in this path
                     "doc",
-                    convert_markdown_udf(
+                    self._convert_udf(
                         F.when(~F.col("_too_large"), F.col("html")),
                         F.col("url"),
                     ),
@@ -1211,7 +1234,7 @@ class CrawlEngine:
             chunks = docs.filter(F.col("status") == "ok").select(
                 "canon_url",
                 "wave",
-                F.posexplode(chunk_markdown_udf(F.col("markdown"))).alias(
+                F.posexplode(self._chunk_udf(F.col("markdown"))).alias(
                     "pos", "content"
                 ),
             )

@@ -1,4 +1,4 @@
-"""Per-host politeness scheduler as salted host-partitioned priority queues.
+"""Per-host politeness scheduler: a one-shuffle per-host top-K.
 
 The reference throttles one token per client at ``1/max(0.1, rps)`` seconds
 (markdown_lab/core/throttle.py:8-33); wave-synchronously that becomes a
@@ -6,29 +6,40 @@ per-host budget of ``floor(rps * wave_seconds)`` fetches per wave, ordered
 by (depth ASC, priority DESC, canon_url ASC) — the deterministic analogue
 of the reference's discovery-order processing.
 
-Scale note: a plain ``Window.partitionBy(host)`` sends EVERY candidate of a
-hot host through one task. ``schedule_wave`` therefore selects each
-over-budget host's head with a salted TREE top-K: count-gated shards first
-(a mega host gets more shards, so no phase-1 task sorts much more than
-``fanin * budget`` rows), then fan-in merge rounds that each sort at most
-``fanin * budget`` rows per task, until one group per host remains. AQE
-skew handling does NOT cover this (it's a windowed cap, not a join).
+``schedule_wave`` finds each host's CUT row — its ``budget``-th candidate
+in that order — with one ``row_number()`` window filtered by ``== budget``,
+joins the cut rows (at most one per host) back onto the candidates, and
+splits scheduled from deferred with one comparison against the cut row.
 
-Exactness (for ANY candidate count, no cliff): the selection keeps the
-per-(host, shard) top-``budget`` at every level, and a true top-``budget``
-row of a host has FEWER than ``budget`` rows above it in the host's total
-order — hence fewer than ``budget`` above it inside any shard or merged
-group it occupies — so it survives every level. Dropped rows are exactly
-the complement, which is what ``deferred`` carries to the next wave.
-The drill in tests/test_politeness_skew.py pins set-equality against the
-naive single-window selection at ``salt_n * budget * 4`` candidates.
+Skew bound: a plain ``Window.partitionBy(host)`` would send EVERY
+candidate of a hot host through one task. Spark plans the rank filter as
+a partial ``WindowGroupLimit`` below the window's exchange, so each map
+task forwards at most ``budget`` rows per host and a mega host's final
+window task sorts at most (map partitions x budget) rows, whatever its
+candidate count. That exchange is the only shuffle the selection needs
+while the cut table (one row per over-budget host) is small: it is then
+broadcast, statically when the planner can size the candidates (parquet
+or checkpointed inputs), else by AQE once the cut table is built, and
+the candidates reach the join unshuffled. When no host is over budget
+the cut table is empty and AQE drops the join. A cut table too big to
+broadcast makes the join a shuffle join on host, whose skewed partitions
+AQE splits. The bound holds while ``budget`` is at most
+``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000): above
+it Spark plans no group limit, so one task sorts ALL of a host's
+candidates. Such a budget lets a host fetch over 1000 pages per wave,
+where it rarely binds.
+
+Exactness: with ``canon_url`` unique among the candidates, the order is
+total, so the rows at or before a host's cut row are exactly its
+top-``budget``; a host with fewer than ``budget`` candidates has no cut
+row and is scheduled whole. ``deferred`` is exactly the complement. The
+drills in tests/test_politeness_skew.py pin set-equality against the
+naive single-window selection under skew.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -37,91 +48,66 @@ def order_cols():
     return [F.col("depth").asc(), F.col("priority").desc(), F.col("canon_url").asc()]
 
 
+def _after(x: Column, cut: Column, desc: bool) -> Column:
+    """``x`` sorts strictly after ``cut`` in one key of order_cols(): Spark
+    sorts nulls first ascending and last descending. Never null."""
+    if desc:
+        nulls = x.isNull() & cut.isNotNull()
+        return F.when(x.isNull() | cut.isNull(), nulls).otherwise(x < cut)
+    nulls = x.isNotNull() & cut.isNull()
+    return F.when(x.isNull() | cut.isNull(), nulls).otherwise(x > cut)
+
+
 def schedule_wave(
-    frontier: DataFrame, budget: int, salt_n: int = 16, fanin: int = 4
+    frontier: DataFrame, budget: int, _unused=None
 ) -> tuple[DataFrame, DataFrame]:
     """Split a wave's candidates into (scheduled, deferred).
 
-    scheduled: per-host head of at most ``budget`` rows in deterministic
+    scheduled: per-host head of at most ``budget`` rows in order_cols()
     order; deferred: the remainder (carries to the next wave unchanged).
 
-    Skew design, from cheapest case up:
-    - a host whose candidate count is <= budget is scheduled WHOLE with
-      no window at all (the common case — most hosts are small);
-    - an over-budget host gets a COUNT-GATED shard count
-      ``ns = clamp(ceil(count / (fanin * budget)), 1, salt_n)`` — small
-      over-budget hosts land in ONE shard (a single bounded sort, no
-      second phase), mega hosts spread over up to ``salt_n`` shards so a
-      phase-1 task sorts ~``fanin * budget`` rows;
-    - shard heads then tree-merge with fan-in ``fanin``: each round
-      merges ``fanin`` adjacent shards' SURVIVORS (<= ``fanin * budget``
-      rows per task) and keeps the exact top-``budget``; a statically-
-      known ``ceil(log_fanin(salt_n))`` rounds settle every host. Rows
-      ride the rounds as ONE tagged frame (sticky ``_def`` flag, already-
-      deferred rows diverted to bounded per-shard buckets) rather than
-      per-round union branches, so the whole selection is a single
-      window chain with no branch recompute — see the inline comment.
+    Requires ``canon_url`` unique within ``frontier`` (so order_cols() is
+    a total order). Every caller guarantees it: the crawl frontier is
+    grouped by canon_url, seeds are deduplicated, and lazy-mode new rows
+    are anti-joined against the tail before they meet its heads.
 
-    The per-host cap is EXACT at any skew (see module docstring); the
-    knob trade-off is ``salt_n`` bounding how many shards a mega host
-    may use (beyond ``salt_n * fanin * budget`` candidates, phase-1
-    shard size grows past ``fanin * budget`` but exactness holds).
+    One window ``row_number() over (partition by host order by
+    order_cols())`` filtered ``== budget`` yields each host's cut row; a
+    left join on host tags every candidate with its host's cut (and a
+    literal ``_cut`` flag, so a null in the cut's own columns is never
+    read as "no cut"); rows strictly after the cut are deferred. See the
+    module docstring for the skew bound and its threshold.
+
+    A third positional argument is accepted and ignored, for callers
+    that still pass a shard count (perfbench/layers.py passes
+    ``cfg.salt_n``).
     """
-    # no broadcast hint: at 10^8 hosts the counts side is too big to ship;
-    # AQE broadcasts it automatically when it is small
-    counts = frontier.groupBy("host").agg(F.count("*").alias("_host_n"))
-    tagged = frontier.join(counts, on="host", how="left")
-
-    under = tagged.filter(F.col("_host_n") <= budget).drop("_host_n")
-    over = tagged.filter(F.col("_host_n") > budget)
-
-    ns = F.least(
-        F.lit(salt_n),
-        F.greatest(F.lit(1), F.ceil(F.col("_host_n") / F.lit(fanin * budget))),
-    ).cast("int")
-    cur = (
-        over.withColumn("_ns", ns)
-        .withColumn("_sh", F.pmod(F.xxhash64(F.col("canon_url")), F.col("_ns")).cast("int"))
-        .drop("_host_n")
-    )
-
-    # Single tagged pass (round-6 rewrite, guide §2.4): the previous
-    # formulation SPLIT kept/deferred/settled into union branches per
-    # round, and because none of them is materialized, every branch
-    # re-executed the whole window chain below it inside one job —
-    # ~8 legs x re-sorted windows at routing time (the crawl pays this
-    # once per wave; measured 3.3-3.7 s -> 1.8-2.3 s for the routed
-    # materialization at sf0.1, both politeness shapes). Instead every
-    # row carries a sticky ``_def`` flag through the SAME merge rounds
-    # and the split is two cheap filters at the end.
-    #
-    # Exactness (same induction as before): within a merge group the
-    # already-deferred rows are diverted to their own per-ORIGINAL-shard
-    # buckets (group key -1-_sh), so a kept row's rank is computed among
-    # exactly the surviving rows of its merged group — identical to
-    # ranking the survivors alone — and a deferred row's _def stays true
-    # by the OR regardless of its rank. Skew bounds are unchanged: a
-    # survivors bucket holds <= fanin * budget rows, a deferred bucket
-    # at most one phase-1 shard (~host_n / ns), so no task ever sorts
-    # more than the phase-1 bound.
-    w_shard = Window.partitionBy("host", "_sh").orderBy(*order_cols())
-    cur = cur.withColumn("_rn", F.row_number().over(w_shard)).withColumn(
-        "_def", F.col("_rn") > budget
-    )
-    rounds = max(0, math.ceil(math.log(salt_n) / math.log(fanin))) if salt_n > 1 else 0
-    width = 1
-    for _ in range(rounds):
-        width *= fanin
-        grp = F.when(F.col("_def"), -1 - F.col("_sh")).otherwise(
-            F.floor(F.col("_sh") / width)
+    w = Window.partitionBy("host").orderBy(*order_cols())
+    cut = (
+        frontier.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == budget)
+        .select(
+            "host",
+            F.col("depth").alias("_cd"),
+            F.col("priority").alias("_cp"),
+            F.col("canon_url").alias("_cu"),
+            F.lit(True).alias("_cut"),
         )
-        w_merge = Window.partitionBy("host", grp).orderBy(*order_cols())
-        cur = cur.withColumn("_rn", F.row_number().over(w_merge)).withColumn(
-            "_def", F.col("_def") | (F.col("_rn") > budget)
-        )
-    out = cur.drop("_rn", "_ns", "_sh")
-    scheduled = under.unionByName(out.filter(~F.col("_def")).drop("_def"))
-    deferred = out.filter(F.col("_def")).drop("_def")
+    )
+    # no broadcast hint: at 10^8 hosts the cut side is too big to ship;
+    # AQE broadcasts it when it is small
+    tagged = frontier.join(cut, on="host", how="left")
+    depth, prio, url = F.col("depth"), F.col("priority"), F.col("canon_url")
+    cd, cp, cu = F.col("_cd"), F.col("_cp"), F.col("_cu")
+    after = _after(depth, cd, False) | (
+        depth.eqNullSafe(cd)
+        & (_after(prio, cp, True) | (prio.eqNullSafe(cp) & _after(url, cu, False)))
+    )
+    tagged = tagged.withColumn(
+        "_def", F.coalesce(F.col("_cut"), F.lit(False)) & after
+    ).drop("_cd", "_cp", "_cu", "_cut")
+    scheduled = tagged.filter(~F.col("_def")).drop("_def")
+    deferred = tagged.filter(F.col("_def")).drop("_def")
     return scheduled, deferred
 
 

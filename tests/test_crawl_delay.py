@@ -69,7 +69,7 @@ def test_cap_matches_naive_window(spark):
         [("a.example", 2.5), ("b.example", 1.0), ("z.example", 60.0)],
         "host string, crawl_delay double",
     )
-    scheduled, deferred = schedule_wave(fr, budget, salt_n=4)
+    scheduled, deferred = schedule_wave(fr, budget)
     kept, cut = cap_schedule_by_delay(scheduled, delays, wave_seconds, budget)
 
     # naive oracle: per-host top-b_h of the WHOLE frontier
@@ -105,7 +105,7 @@ def test_delay_floor_one_fetch_per_wave(spark):
     delays = spark.createDataFrame(
         [("a.example", 3600.0)], "host string, crawl_delay double"
     )
-    scheduled, _ = schedule_wave(fr, 5, salt_n=4)
+    scheduled, _ = schedule_wave(fr, 5)
     kept, _cut = cap_schedule_by_delay(scheduled, delays, 5, 5)
     assert kept.count() == 1  # progress, not starvation
 

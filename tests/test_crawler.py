@@ -429,3 +429,60 @@ def test_seen_compaction_bounds_rebuild_and_preserves_identity(
     assert {r["canon_url"] for r in seen_mid.collect()} == {
         r["canon_url"] for r in seen_mid_u.collect()
     }
+
+
+def test_checkpoint_writes_run_in_callers_job_group(spark, corpus, pages_df, tmp_path):
+    """The wave's checkpoint writes run on driver threads; the caller's
+    job group must reach them, so a group-scoped view of the crawl (the
+    traced benchmark run, a cancelJobGroup) covers the parquet writes."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    group = "ckpt-writes"
+    sc.setJobGroup(group, "checkpointed crawl")
+    try:
+        CrawlEngine(
+            spark, pages_df, CrawlConfig(**{**CFG, "max_waves": 2}),
+            checkpoint_dir=str(tmp_path / "ck"),
+        ).crawl(corpus.seeds)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    writes = 0
+    for job in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job)
+        names = [
+            st.name for st in map(tracker.getStageInfo, info.stageIds) if st
+        ]
+        writes += any(n.startswith("parquet at") for n in names)
+    # two waves x five checkpoint frames, all inside the group
+    assert writes >= 10
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
+
+
+def test_failed_checkpoint_write_leaves_wave_incomplete(spark, corpus, pages_df, tmp_path):
+    """One of the five concurrent wave writes fails: the error reaches the
+    caller after the other writes finish, the wave gets no MANIFEST.json,
+    and complete_waves()/resume_state() ignore it."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    ck = str(tmp_path / "ck")
+    engine = CrawlEngine(
+        spark, pages_df, CrawlConfig(**{**CFG, "max_waves": 2}), checkpoint_dir=ck
+    )
+    engine.crawl(corpus.seeds)
+    assert engine.complete_waves() == [0, 1]
+    frontier, seen, _ = engine.resume_state()
+    good = spark.range(3)
+    bad = spark.range(3).select(F.raise_error(F.lit("injected write failure")))
+    with pytest.raises(Exception, match="injected write failure"):
+        engine._write_wave(2, frontier, seen, good, bad, good)
+    wave_dir = os.path.join(ck, "wave=2")
+    assert not os.path.exists(os.path.join(wave_dir, "MANIFEST.json"))
+    for name in ("frontier_next", "seen_delta", "docs", "metrics"):
+        assert os.path.exists(os.path.join(wave_dir, name, "_SUCCESS")), name
+    assert engine.complete_waves() == [0, 1]
+    _, _, next_wave = engine.resume_state()
+    assert next_wave == 2
